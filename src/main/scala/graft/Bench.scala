@@ -1,9 +1,13 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** Local cores (and shuffle partitions) of the harness mains that
+    * mirror Bench's session — Verify, JobProfile, PlanDump — so a run
+    * without `SPARK_GRAFT_CPUS` set has the benched shape. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // dev-only config experiments (SPARK_GRAFT_EXTRA_CONF="k=v;k=v"):
     // lets a config candidate be A/B-measured WITHOUT editing the
     // committed session config. The driver never sets it, so its

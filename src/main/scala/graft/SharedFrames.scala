@@ -65,17 +65,43 @@ object SharedFrames {
     val root = s.conf.getOption(ArtifactsDirKey).map(_.trim)
       .filter(_.nonEmpty).getOrElse(s.conf.get("spark.sql.warehouse.dir"))
     val name = "graft-shared-" + java.util.UUID.randomUUID().toString
-    val isLocal = !root.contains(":/") || root.startsWith("file:")
-    if (isLocal) {
-      val local = java.nio.file.Paths.get(
-        if (root.startsWith("file:")) new java.net.URI(root).getPath
-        else root)
-      val d = java.nio.file.Files.createDirectories(local.resolve(name))
-        .toAbsolutePath
-      tempDirs.add(d)
-      d.toString
-    } else s"${root.stripSuffix("/")}/$name"
+    localRoot(root) match {
+      case Some(local) =>
+        val d = java.nio.file.Files.createDirectories(local.resolve(name))
+          .toAbsolutePath
+        tempDirs.add(d)
+        d.toString
+      case None => s"${root.stripSuffix("/")}/$name"
+    }
   }
+
+  /** The local filesystem path of an artifacts root, or None for a
+    * remote one. The root is parsed once as a `java.net.URI`: no scheme
+    * or `file` is local (`file:relative` is opaque, so its path is the
+    * scheme-specific part), and so is a one-letter scheme — a Windows
+    * drive (`C:/...`), not a filesystem URI. A root that is not a legal
+    * URI (say, one with a space) keeps the scheme its `scheme:` prefix
+    * names: `s3a://bucket/my dir` stays remote, `file:/tmp/a b` is the
+    * local `/tmp/a b`, and a prefix-less string is a plain local path. */
+  private[graft] def localRoot(root: String): Option[java.nio.file.Path] = {
+    val uri = try Some(new java.net.URI(root))
+      catch { case _: java.net.URISyntaxException => None }
+    val scheme = uri match {
+      case Some(u) => Option(u.getScheme)
+      case None => SchemePrefix.findFirstMatchIn(root).map(_.group(1))
+    }
+    scheme match {
+      case Some(sc) if sc.equalsIgnoreCase("file") =>
+        Some(java.nio.file.Paths.get(uri match {
+          case Some(u) => Option(u.getPath).getOrElse(u.getSchemeSpecificPart)
+          case None => root.substring(sc.length + 1)
+        }))
+      case Some(sc) if sc.length > 1 => None
+      case _ => Some(java.nio.file.Paths.get(root))
+    }
+  }
+
+  private val SchemePrefix = "^([A-Za-z][A-Za-z0-9+.-]*):".r
 
   // deleteOnExit cannot remove a NON-EMPTY directory, so each local
   // artifact dir is also registered here and recursively deleted by one

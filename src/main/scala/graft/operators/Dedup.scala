@@ -795,20 +795,32 @@ object Dedup {
     * contamination_ratio) for every doc with ≥ 1 gram position. */
   def benchmarkOverlap(corpus: DataFrame, benchmark: DataFrame,
       idCol: String, textCol: String, k: Int = 20,
+      hashGrams: Boolean = true): DataFrame =
+    benchmarkOverlapFrom(corpus,
+      benchmarkGrams(benchmark, textCol, k, hashGrams), idCol, textCol, k)
+
+  /** The distinct k-char grams of `benchmark`'s text — the broadcast
+    * side of [[benchmarkOverlap]], as a one-column `__g` frame (xxhash64
+    * longs when `hashGrams`, else the literal grams). A caller that
+    * probes many corpus slices against one eval set (the streaming
+    * funnel) materializes this once and passes it to
+    * [[benchmarkOverlapFrom]]. */
+  def benchmarkGrams(benchmark: DataFrame, textCol: String, k: Int = 20,
       hashGrams: Boolean = true): DataFrame = {
     require(k >= 2, "gram length k must be at least 2")
-    def grams(df: DataFrame, cols: Column*): DataFrame = df
-      .select(col(textCol).as("__t") +: cols: _*)
-      .filter(length(col("__t")) >= k)
-      .select(explode(expr(
-        s"transform(sequence(1, length(__t) - ${k - 1}), i -> substring(__t, i, $k))"))
-        .as("__gram") +: cols: _*)
-      .withColumn("__g",
-        if (hashGrams) xxhash64(col("__gram")) else col("__gram"))
-      .drop("__gram")
-    val benchGrams = grams(benchmark).select("__g").distinct()
-    val hits = grams(corpus, col(idCol))
-      .join(broadcast(benchGrams), Seq("__g"), "left_semi")
+    textGrams(benchmark, textCol, k, hashGrams).select("__g").distinct()
+  }
+
+  /** [[benchmarkOverlap]] over PRECOMPUTED benchmark grams (see
+    * [[benchmarkGrams]]), which must be built with the same `k`. The
+    * corpus grams are hashed iff `grams` holds xxhash64 longs. */
+  def benchmarkOverlapFrom(corpus: DataFrame, grams: DataFrame,
+      idCol: String, textCol: String, k: Int = 20): DataFrame = {
+    require(k >= 2, "gram length k must be at least 2")
+    val hashGrams =
+      grams.schema("__g").dataType == org.apache.spark.sql.types.LongType
+    val hits = textGrams(corpus, textCol, k, hashGrams, col(idCol))
+      .join(broadcast(grams), Seq("__g"), "left_semi")
       .groupBy(idCol).agg(count(lit(1)).cast("long").as("n_contaminated"))
     corpus.select(col(idCol),
         (length(col(textCol)) - (k - 1)).cast("long").as("n_pos"))
@@ -818,6 +830,19 @@ object Dedup {
       .withColumn("contamination_ratio",
         col("n_contaminated").cast("double") / col("n_pos").cast("double"))
   }
+
+  /** One `__g` row per k-char gram position of `textCol` (plus `cols`),
+    * hashed with xxhash64 when `hashGrams`. */
+  private def textGrams(df: DataFrame, textCol: String, k: Int,
+      hashGrams: Boolean, cols: Column*): DataFrame = df
+    .select(col(textCol).as("__t") +: cols: _*)
+    .filter(length(col("__t")) >= k)
+    .select(explode(expr(
+      s"transform(sequence(1, length(__t) - ${k - 1}), i -> substring(__t, i, $k))"))
+      .as("__gram") +: cols: _*)
+    .withColumn("__g",
+      if (hashGrams) xxhash64(col("__gram")) else col("__gram"))
+    .drop("__gram")
 
   /** Embedding near-dup candidate pairs: random-hyperplane LSH with
     * BAND AMPLIFICATION — `numTables` independent hash tables of

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.store.VectorStore
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
 
 /** Structured Streaming surface. The reference has NO streaming
   * (SURVEY §2.9) — this is the beyond-reference extension: append-mode
@@ -464,9 +464,12 @@ object StreamIngest {
             sigs, seen, idCol, maxHamming = maxHamming, bands = bands)
           val survivors = inBatch.join(dupIds, Seq(idCol), "left_anti")
             .localCheckpoint(true)
-          // the only eager state write this trigger: one O(batch) delta
-          val survivorSigs = sigs.join(dupIds, Seq(idCol), "left_anti")
-            .localCheckpoint(true)
+          // the only eager state write this trigger: one O(batch) delta,
+          // re-signed from the survivors cut (a narrow map) rather than
+          // a second anti-join, which would re-run the probe and its
+          // hot-bucket groupBy over ALL accepted signatures
+          val survivorSigs = graft.operators.Dedup.simhashSignatures(
+            survivors, idCol, textCol).localCheckpoint(true)
           deltasSinceCompact += 1
           if (deltasSinceCompact >= compactEvery) {
             val merged = (segments.get().tail :+ survivorSigs)
@@ -528,7 +531,18 @@ object StreamIngest {
     * State: one simhash-signature segment list over all SEEN docs
     * (compacted like [[nearDupIngest]]) plus six counters. Every
     * per-batch job is O(batch) except the signature probe, which is
-    * banded — never all-pairs. */
+    * banded — never all-pairs.
+    *
+    * Per-trigger job shape — each stage is evaluated exactly once:
+    * batch cut → in-batch MIS (its own eager rounds) → signature cut →
+    * flags cut (the batch rows plus five cumulative stage flags, from
+    * one groupBy over the stages' (id, stage-bit) rows) → one
+    * conditional aggregate for the six counts → `onSurvivors` reads
+    * the rows whose last flag is true from the flags cut. Counts are
+    * ROW counts with semi-join semantics: gopher is a per-row flag,
+    * each later stage passes a row when its id is in that stage's pass
+    * set (a duplicated id never fans out). The benchmark's distinct
+    * gram set is built once per stream, when the query starts. */
   def streamingCurationFunnel(stream: DataFrame, idCol: String,
       textCol: String,
       lmModel: java.util.HashMap[String, java.lang.Double],
@@ -543,7 +557,8 @@ object StreamIngest {
     require(!lmModel.isEmpty,
       "empty LM model — fit charBigramModel on a bootstrap corpus")
     require(compactEvery >= 2, "compactEvery must be >= 2")
-    val benchFixed = benchmark.localCheckpoint(true)
+    val benchGrams = graft.operators.Dedup.benchmarkGrams(benchmark, textCol,
+      k = dupK, hashGrams = false).localCheckpoint(true)
     val counts = new java.util.concurrent.atomic.AtomicReference(
       CurationStageCounts(0L, 0L, 0L, 0L, 0L, 0L))
     val segments = new java.util.concurrent.atomic.AtomicReference(
@@ -557,12 +572,6 @@ object StreamIngest {
       .foreachBatch { (batch0: DataFrame, _: Long) =>
         if (!batch0.isEmpty) {
           val batch = batch0.localCheckpoint(true)
-          val ids = batch.select(col(idCol))
-          val g = batch
-            .withColumn("__g", gopherRules(col(textCol)))
-            .where(col("__g.n_words") >= minWords &&
-              col("__g.alpha_word_ratio") >= minAlphaRatio)
-            .select(col(idCol))
           val lm = graft.operators.TextAnalysis.scoreWithBigramModel(
               batch, idCol, textCol, lmModel)
             .where(col("lm_score") >= minLmScore).select(col(idCol))
@@ -580,19 +589,43 @@ object StreamIngest {
           val dupIds = graft.operators.Dedup.nearDupProbeSimHash(
             sigs, seen, idCol, maxHamming = maxHamming, bands = bands)
           val nd = inBatch.join(dupIds, Seq(idCol), "left_anti")
-          val dec = graft.operators.Dedup.benchmarkOverlap(
-              batch, benchFixed, idCol, textCol, k = dupK,
-              hashGrams = false)
+          val dec = graft.operators.Dedup.benchmarkOverlapFrom(
+              batch, benchGrams, idCol, textCol, k = dupK)
             .where(col("contamination_ratio") < maxContamination)
             .select(col(idCol))
-          val s3 = g.join(lm, Seq(idCol), "left_semi")
-          val s4 = s3.join(ds, Seq(idCol), "left_semi")
-          val s5 = s4.join(nd, Seq(idCol), "left_semi")
+          // one (id, stage-bit) union reduced by one groupBy: bit i is
+          // set iff the id is in stage i's pass set (the semi-join
+          // semantics — a duplicated id never fans out)
+          val bits = Seq(lm, ds, nd, dec).zipWithIndex
+            .map { case (ids, i) =>
+              ids.select(col(idCol), lit(1 << i).as("__b")) }
+            .reduce(_ unionByName _)
+            .groupBy(idCol).agg(bit_or(col("__b")).as("__bits"))
+          def has(i: Int): Column =
+            (coalesce(col("__bits"), lit(0)).bitwiseAND(lit(1 << i))) =!= 0
+          val gopherOk = coalesce(
+            col("__g.n_words") >= minWords &&
+              col("__g.alpha_word_ratio") >= minAlphaRatio, lit(false))
+          // cumulative flags per batch ROW: gopher is a row flag, every
+          // later stage ANDs in its id-set membership
+          val flagCols = Seq("__f1", "__f2", "__f3", "__f4", "__f5")
+          val flagged = batch
+            .withColumn("__g", gopherRules(col(textCol)))
+            .withColumn("__f1", gopherOk)
+            .join(bits, Seq(idCol), "left")
+            .withColumn("__f2", col("__f1") && has(0))
+            .withColumn("__f3", col("__f2") && has(1))
+            .withColumn("__f4", col("__f3") && has(2))
+            .withColumn("__f5", col("__f4") && has(3))
+            .select(batch.columns.map(c =>
+              col("`" + c.replace("`", "``") + "`")) ++
+              flagCols.map(col): _*)
             .localCheckpoint(true)
-          val s6 = s5.join(dec, Seq(idCol), "left_semi")
-          val delta = CurationStageCounts(ids.count(), g.count(),
-            s3.count(), s4.count(), s5.count(), s6.count())
-          counts.set(counts.get() + delta)
+          val r = flagged.agg(count(lit(1)),
+            flagCols.map(f => count_if(col(f))): _*).head()
+          counts.set(counts.get() + CurationStageCounts(r.getLong(0),
+            r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
+            r.getLong(5)))
           // the signature state accumulates ALL seen docs (the batch
           // flag is corpus-wide, so later copies of ANY seen doc must
           // lose, whether or not the first copy survived other stages)
@@ -603,7 +636,7 @@ object StreamIngest {
             segments.set(Vector(segments.get().head, merged))
             deltasSinceCompact = 0
           } else segments.set(segments.get() :+ sigs)
-          onSurvivors(batch.join(s6, Seq(idCol), "left_semi"))
+          onSurvivors(flagged.where(col("__f5")).drop(flagCols: _*))
         }
       }
       .start()

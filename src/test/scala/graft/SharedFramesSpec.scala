@@ -179,6 +179,47 @@ class SharedFramesSpec extends SparkSpec {
         files2.mkString(", "))
   }
 
+  test("artifacts root parses once as a URI: file and scheme-less roots " +
+      "(a Windows drive included) are local, other schemes remote") {
+    import java.nio.file.Paths
+    assert(SharedFrames.localRoot("file:relative/dir") ===
+      Some(Paths.get("relative/dir")))
+    assert(SharedFrames.localRoot("file:///abs/dir") ===
+      Some(Paths.get("/abs/dir")))
+    assert(SharedFrames.localRoot("file:/abs/dir") ===
+      Some(Paths.get("/abs/dir")))
+    assert(SharedFrames.localRoot("/plain/abs dir") ===
+      Some(Paths.get("/plain/abs dir")))
+    assert(SharedFrames.localRoot("plain/rel") === Some(Paths.get("plain/rel")))
+    assert(SharedFrames.localRoot("C:/data/art") ===
+      Some(Paths.get("C:/data/art")))
+    assert(SharedFrames.localRoot("hdfs://host/x") === None)
+    assert(SharedFrames.localRoot("s3a://bucket/x") === None)
+    // not legal URIs (a space): the scheme prefix still decides
+    assert(SharedFrames.localRoot("s3a://bucket/my dir") === None)
+    assert(SharedFrames.localRoot("hdfs://nn/a b") === None)
+    assert(SharedFrames.localRoot("file:/tmp/a b") ===
+      Some(Paths.get("/tmp/a b")))
+    assert(SharedFrames.localRoot("file:///tmp/a b") ===
+      Some(Paths.get("/tmp/a b")))
+    assert(SharedFrames.localRoot("C:/data/my art") ===
+      Some(Paths.get("C:/data/my art")))
+    // an opaque file: root used to NPE; it now resolves against the
+    // working directory like any relative path
+    val tmp = java.nio.file.Files.createTempDirectory("graft-artrel-")
+    val rel = Paths.get("").toAbsolutePath.relativize(tmp.toAbsolutePath)
+    spark.conf.set(SharedFrames.ArtifactsDirKey, s"file:$rel")
+    try {
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-sfspec-rel-").toAbsolutePath.toString
+      Seq((1L, "lambda mu nu xi omicron")).toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val files = SharedFrames.lmScoredDocs(spark, dir).inputFiles
+      assert(files.nonEmpty && files.forall(_.contains(tmp.toString)),
+        s"artifact must live under $tmp, got: " + files.mkString(", "))
+    } finally spark.conf.unset(SharedFrames.ArtifactsDirKey)
+  }
+
   test("perplexityBucketsFromScored over the shared frame equals " +
       "perplexityBuckets run end-to-end") {
     val docs = spark.read.parquet(s"$fixtureDir/documents.parquet")

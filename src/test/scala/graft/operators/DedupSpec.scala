@@ -454,6 +454,29 @@ class DedupSpec extends SparkSpec {
     assert(hashed.toSeq == out.toSeq)
   }
 
+  test("benchmarkOverlapFrom over benchmarkGrams equals benchmarkOverlap " +
+      "row for row, hashed and literal") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    def text(n: Int) = Array.fill(n)(('a' + rnd.nextInt(4)).toChar).mkString
+    val benchmark = (0 until 5).map(i => (100L + i, text(40)))
+      .toDF("doc_id", "text")
+    val corpus = (0 until 30).map(i => (i.toLong, text(5 + i * 3)))
+      .toDF("doc_id", "text")
+    for (hashGrams <- Seq(true, false)) {
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("doc_id").collect().map(_.toSeq).toSeq
+      val direct = rows(Dedup.benchmarkOverlap(corpus, benchmark, "doc_id",
+        "text", k = 6, hashGrams = hashGrams))
+      val grams = Dedup.benchmarkGrams(benchmark, "text", k = 6,
+        hashGrams = hashGrams)
+      val from = rows(Dedup.benchmarkOverlapFrom(corpus, grams, "doc_id",
+        "text", k = 6))
+      assert(from == direct, s"hashGrams=$hashGrams")
+      assert(direct.exists(_(2) != 0L), "fixture must contaminate a doc")
+    }
+  }
+
   test("dupSpanStats: hashed-gram variant equals the literal-gram " +
       "variant on a mixed corpus") {
     import spark.implicits._

@@ -143,6 +143,106 @@ class CurationFunnelStreamSpec extends SparkSpec {
       s"chopped $chopped vs whole $whole")
   }
 
+  /** Runs the funnel over `batches` (one trigger each) with the
+    * fixture's LM model and eval docs; returns the accumulated counts,
+    * the rows handed to `onSurvivors`, and each trigger's Spark job
+    * count (jobs in the query's job group, read after a marker job
+    * has passed through the listener bus). */
+  private def runFunnel(batches: Seq[Seq[(Long, String)]])
+      : (StreamIngest.CurationStageCounts, Seq[(Long, String)], Seq[Int]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val docs = fixture.map(t => (t._1, t._2)).toDF("doc_id", "text")
+    val lmModel = graft.operators.TextAnalysis.charBigramModel(
+      docs, "text")
+    val benchmark = docs.where(col("doc_id") % 20 === 0)
+    val sc = spark.sparkContext
+    val byGroup = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val marker = new java.util.concurrent.Semaphore(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).foreach { g =>
+          if (g == "curation-spec-marker") marker.release()
+          else byGroup.merge(g, 1, (a: Integer, b: Integer) => a + b)
+        }
+    }
+    sc.addSparkListener(listener)
+    val survivors =
+      new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val source = MemoryStream[(Long, String)]
+    val funnel = StreamIngest.streamingCurationFunnel(
+      source.toDF().toDF("doc_id", "text"), "doc_id", "text",
+      lmModel, benchmark, onSurvivors = df => df.collect().foreach(r =>
+        survivors.add((r.getLong(0), r.getString(1)))))
+    def jobsSoFar(): Int = {
+      sc.setJobGroup("curation-spec-marker", "listener-bus flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(marker.tryAcquire(60, java.util.concurrent.TimeUnit.SECONDS))
+      Option(byGroup.get(funnel.query.runId.toString)).fold(0)(_.intValue)
+    }
+    try {
+      val perTrigger = batches.map { b =>
+        val before = jobsSoFar()
+        source.addData(b)
+        funnel.query.processAllAvailable()
+        jobsSoFar() - before
+      }
+      (funnel.counts, survivors.asScala.toSeq, perTrigger)
+    } finally {
+      funnel.query.stop()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a repeated doc_id counts ROWS under semi-join semantics: gopher " +
+      "is a row flag, later stages pass a row whose id is in their pass " +
+      "set; null and one-char texts fail; survivors are the last-flag rows") {
+    val gibberishA = (1 to 16).map(i => s"qqj$i wvvk$i").mkString(" ")
+    val gibberishB = (1 to 16).map(i => s"zzv$i kkq$i").mkString(" ")
+    val batch: Seq[(Long, String)] = Seq(
+      // id 1: a clean doc plus a one-word row that fails gopher
+      (1L, quality(1)), (1L, "tiny"),
+      (2L, quality(2)),
+      // id 3: two copies of one doc — both rows pass gopher and LM,
+      // and the id fails dup-span (every gram occurs twice)
+      (3L, quality(3)), (3L, quality(3)),
+      // id 5: a gibberish row (gopher pass, LM fail) and a six-word
+      // clean row (gopher fail, LM pass — seed 24's bigrams all occur in
+      // the fixture): the gibberish row passes LM because its id is in
+      // the LM pass set
+      (5L, gibberishA), (5L, quality(24).take(60)),
+      // id 7: null text and a one-char text — both fail gopher
+      (7L, null), (7L, "x"),
+      // id 8: gibberish (LM fail) plus an LM-unscored one-char text,
+      // which must not put the id in the LM pass set
+      (8L, gibberishB), (8L, "y"))
+    // rows by stage: total 11; gopher 1a 2 3 3 5a 8a = 6; LM drops 8a
+    // = 5; dup-span drops both rows of 3 = 3; near-dup and decontam
+    // drop nothing
+    val (c, survivors, _) = runFunnel(Seq(batch))
+    assert(c === StreamIngest.CurationStageCounts(11L, 6L, 5L, 3L, 3L, 3L))
+    assert(survivors.sorted ===
+      Seq((1L, quality(1)), (2L, quality(2)), (5L, gibberishA)))
+  }
+
+  test("onSurvivors receives exactly the decontam count, summed over " +
+      "triggers, and each micro-batch runs a bounded number of jobs") {
+    val (c, survivors, jobs) = runFunnel((0 to 2).map(b =>
+      fixture.filter(_._3 == b).map(t => (t._1, t._2))))
+    assert(survivors.size.toLong === c.decontam)
+    assert(survivors.map(_._1).distinct.size === survivors.size)
+    // every stage is evaluated once per trigger: this fixture runs
+    // 28/34/52 jobs per trigger (the last trigger's clique adds MIS
+    // rounds). With six per-stage count()s, each re-running its stage,
+    // it ran 63/68/85. The margin of 5 is below the 6 jobs that
+    // per-stage counts alone would add back.
+    assert(jobs.forall(_ > 0), s"no jobs seen per trigger: $jobs")
+    assert(jobs.zip(Seq(28, 34, 52)).forall { case (n, pin) => n <= pin + 5 },
+      s"jobs per trigger: $jobs")
+  }
+
   test("near-dup state spans micro-batches: a later exact copy of an " +
       "already-seen doc fails the near-dup stage") {
     val base = quality(55) + " " + quality(56)
